@@ -305,9 +305,9 @@ class Frame:
         (partition << 33) + offset — NEVER a position on a
         multi-partition frame; exposing it as a pandas label silently
         corrupts every positional consumer."""
-        from .operators.distwindow import running_expr
+        from .operators.distwindow import position_expr
 
-        return running_expr(self._sdf, F.col(I.ORDER_COL), F.lit(1), "count") - 1
+        return position_expr(self._sdf)
 
     @property
     def index(self) -> "Series":
@@ -2372,7 +2372,7 @@ class Frame:
         """Positional value equality (``generic.py:1354``): same shape,
         same columns, same values at the same positions. Positions come
         from the distributed running count — no global window."""
-        from .operators.distwindow import running_expr
+        from .operators.distwindow import position_expr
 
         if self.columns != other.columns:
             return False
@@ -2380,8 +2380,7 @@ class Frame:
             return False
 
         def with_pos(f: "Frame") -> SparkDataFrame:
-            pos = running_expr(f._sdf, F.col(I.ORDER_COL), F.lit(1), "count") - 1
-            return f._sdf.select(pos.alias("__pos__"),
+            return f._sdf.select(position_expr(f._sdf).alias("__pos__"),
                                  *[F.col(c) for c in f.columns])
 
         a, b = with_pos(self), with_pos(other)
@@ -2396,7 +2395,7 @@ class Frame:
         order (unlike a boolean filter). Positions come from the
         distributed running count; the (output_slot → position) map is
         a broadcast literal frame."""
-        from .operators.distwindow import running_expr
+        from .operators.distwindow import position_expr
 
         idx = list(indices)
         if not idx:
@@ -2404,8 +2403,7 @@ class Frame:
         neg = [i for i in idx if i < 0]
         total = self._sdf.count() if neg else None
         idx = [i if i >= 0 else total + i for i in idx]
-        pos = running_expr(self._sdf, F.col(I.ORDER_COL), F.lit(1), "count") - 1
-        base = self._sdf.withColumn("__pos__", pos)
+        base = self._sdf.withColumn("__pos__", position_expr(self._sdf))
         spark = self._sdf.sparkSession
         want = spark.createDataFrame(
             [(s, int(p)) for s, p in enumerate(idx)],

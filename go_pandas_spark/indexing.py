@@ -22,16 +22,6 @@ from pyspark.sql import Column, Window as W, functions as F
 from . import _internal as I
 
 
-def _rn(sdf):
-    """0-based global position over the order contract — the BLOCKED
-    distributed running count (operators/distwindow), not a single
-    unpartitioned window: positional filters must not serialize the
-    frame through one task at scale."""
-    from .operators.distwindow import running_expr
-
-    return running_expr(sdf, F.col(I.ORDER_COL), F.lit(1), "count") - 1
-
-
 class _LocIndexer:
     def __init__(self, frame):
         self._f = frame
@@ -176,7 +166,9 @@ class _ILocIndexer:
             out = f
         else:
             cond, reverse = self._positions(key)
-            sdf = (f._sdf.withColumn("__rn__", _rn(f._sdf))
+            from .operators.distwindow import position_expr
+
+            sdf = (f._sdf.withColumn("__rn__", position_expr(f._sdf))
                    .filter(cond(F.col("__rn__"))).drop("__rn__"))
             if reverse:
                 sdf = (sdf.orderBy(F.col(I.ORDER_COL).desc())

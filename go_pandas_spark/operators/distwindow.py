@@ -21,9 +21,10 @@ build time and re-shipped as broadcast relations (r9 — lazy carry
 subtrees re-executed the upstream chain once per statistic inside the
 main action). Driver-built tables are memoized by content
 (``_memo_table``) so rebuilt plans canonicalize equal and the
-pin_order cache hits across runs. Only the Series-mode pure-Column
-expression variants — which ESCALATE to the frame kernels past the
-cap when frame-anchored (window.py ``_series_escalates``) — plus
+pin_order cache hits across runs. Series order ops run these same
+kernels over the Series' anchor frame (series.py
+``_run_order_kernel``), at every parallelism. Only the pure-Column
+running count/sum behind positional access (``running_expr``) plus
 rolling's monotonic subdividing layout (see ``_n_blocks``) still
 embed literals and stay capped at 256 blocks
 (``_n_blocks(lit=True)``). Then:
@@ -48,7 +49,6 @@ No driver-side data beyond the split points and the carry table.
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame as SparkDataFrame, Window as W, functions as F
@@ -357,9 +357,10 @@ def _pin_if_order(sdf: SparkDataFrame, order_col: Column) -> SparkDataFrame:
 
 def _n_blocks(sdf: SparkDataFrame, lit: bool = False) -> int:
     """Target block count. ``lit=True`` is for the LITERAL-embedding
-    Series-mode expression kernels (literal split bounds + literal
-    carry lookups): capped at 256 because every block adds expression
-    nodes to the plan. The DataFrame kernels expanding/ewm/
+    pure-Column running count/sum (``running_expr``: literal split
+    bounds + literal carry lookups): capped at 256 because every block
+    adds expression nodes to the plan. The DataFrame kernels — which
+    every Series order op runs too — expanding/ewm/
     running-pick/rank carry block metadata as broadcast tables /
     single array literals with O(1) plan size in the block count, so
     they follow defaultParallelism up to 4096 — a 1000-executor
@@ -501,10 +502,10 @@ def _blk_expr(key: Column, bounds: list, null_block: int = 0) -> Column:
     """Block id = #split-points strictly below the key: a pure,
     deterministic function of the key value. Equal keys always share a
     block (no tie group ever straddles a boundary); nulls all land in
-    ``null_block``. LITERAL comparison chain — Series-mode expression
-    contexts only (≤256 bounds by _n_blocks(lit=True)); the DataFrame
-    kernels attach the block id via _attach_block, which is O(1) plan
-    size at any block count."""
+    ``null_block``. LITERAL comparison chain — the pure-Column
+    ``running_expr`` (≤256 bounds by _n_blocks(lit=True)) and
+    _attach_block's ≤_LIT_MAX branch; above that _attach_block keeps
+    O(1) plan size at any block count."""
     if not bounds:
         return F.lit(0)
     e = None
@@ -618,11 +619,6 @@ def collect_sid_layout(sdf: SparkDataFrame, order_col: Column):
     return stats, all(len(v) == 1 for v in pids.values())
 
 
-def collect_sid_stats(sdf: SparkDataFrame, order_col: Column):
-    """Back-compat shape of ``collect_sid_layout``: just the stats."""
-    return collect_sid_layout(sdf, order_col)[0]
-
-
 def _block_partition_monotonic(sdf: SparkDataFrame, order_col: Column,
                                n: int,
                                sid_stats=None) -> SparkDataFrame | None:
@@ -644,7 +640,7 @@ def _block_partition_monotonic(sdf: SparkDataFrame, order_col: Column,
     if sid_stats is False:  # caller probed already: known non-contiguous
         return None
     if sid_stats is None:
-        sid_stats = collect_sid_stats(sdf, order_col)
+        sid_stats = collect_sid_layout(sdf, order_col)[0]
         if sid_stats is None:
             return None
     if not sid_stats:
@@ -697,8 +693,7 @@ def block_partition(sdf: SparkDataFrame, order_col: Column,
 # task's sequential numpy pass stays trivially cheap. 4M rows ≈ tens of
 # ms per kernel column; a handful of huge cached partitions (e.g. an
 # upstream AQE-coalesced exchange) falls back to the groupBy layouts.
-_ALIGNED_ROWS_CAP = int(os.environ.get("SPARK_GRAFT_ALIGNED_ROWS_CAP",
-                                       "4000000"))
+_ALIGNED_ROWS_CAP = 4_000_000
 
 # Row threshold for running_pick's VALUE-keyed fast-carry strategy
 # (see running_pick_blocked): below it the lazy shared-exchange carry
@@ -709,8 +704,7 @@ _ALIGNED_ROWS_CAP = int(os.environ.get("SPARK_GRAFT_ALIGNED_ROWS_CAP",
 # this box: 45k-row union lazy 0.78 s vs fast ~1.1 s; 450k lazy 0.95
 # vs fast 1.34; 6.25M fast 2.38 vs lazy 2.90 (1.22×, growing with
 # data) — geometric midpoint ≈ 2M. Threshold in ROWS, not cores.
-_CARRY_FAST_MIN_ROWS = int(os.environ.get(
-    "SPARK_GRAFT_CARRY_FAST_MIN_ROWS", "2000000"))
+_CARRY_FAST_MIN_ROWS = 2_000_000
 
 
 def _blocked_base(sdf: SparkDataFrame, order_col: Column,
@@ -1425,7 +1419,7 @@ def dense_row_number(sdf: SparkDataFrame, order_col: Column,
         sid = F.shiftright(order_col, 33)
         off = order_col.bitwiseAND(F.lit(MASK))
         if sid_stats is None:
-            sid_stats = collect_sid_stats(sdf, order_col)
+            sid_stats = collect_sid_layout(sdf, order_col)[0]
         if sid_stats:
             rows, acc = [], 0
             for b, c, _lo, _hi in sid_stats:
@@ -1444,6 +1438,11 @@ def dense_row_number(sdf: SparkDataFrame, order_col: Column,
     out = expanding_blocked(sdf.withColumn("__dr1__", F.lit(1)),
                             order_col, {name: ("__dr1__", "count")})
     return out.drop("__dr1__")
+
+
+# Driver-bytes budget for the fused median grid attempt (see
+# expanding_quantile_approx_blocked): 256 MB of (value, count) pairs.
+_MEDIAN_FUSE_BUDGET = 256 * 2**20
 
 
 def expanding_quantile_approx_blocked(sdf: SparkDataFrame, order_col: Column,
@@ -1487,8 +1486,8 @@ def expanding_quantile_approx_blocked(sdf: SparkDataFrame, order_col: Column,
     whose distinct count exceeds ``max(4·n_grid, 4096)`` overflows the
     histogram budget and the classic percentile_approx + bincount pair
     runs instead (high-cardinality inputs pay one extra pruned pass for
-    the attempt; ``SPARK_GRAFT_MEDIAN_FUSE=0`` disables the attempt for
-    deployments that know their data is like that)."""
+    the attempt). So does a layout whose histograms would overflow
+    ``_MEDIAN_FUSE_BUDGET``."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.types import (BinaryType, LongType, StringType,
@@ -1511,8 +1510,6 @@ def expanding_quantile_approx_blocked(sdf: SparkDataFrame, order_col: Column,
     per: dict = {}
     blks: list = []
     fused_done = False
-    fuse_budget = int(os.environ.get("SPARK_GRAFT_MEDIAN_FUSE_BUDGET",
-                                     str(256 * 2**20)))
     ucap = max(4 * n_grid, 4096)
     # Driver-bytes budget for the fused attempt (guide §5): each
     # (block, col) histogram ships ≤ ucap (value, count) pairs = 16
@@ -1521,8 +1518,7 @@ def expanding_quantile_approx_blocked(sdf: SparkDataFrame, order_col: Column,
     # its sid count (unbounded at scale), so gate the whole attempt on
     # the estimated total and fall back to the classic fixed-size
     # percentile_approx grid when it would not fit.
-    if (os.environ.get("SPARK_GRAFT_MEDIAN_FUSE", "1") == "1"
-            and _nb_est * len(cols) * ucap * 16 <= fuse_budget):
+    if _nb_est * len(cols) * ucap * 16 <= _MEDIAN_FUSE_BUDGET:
         hist_schema = StructType([
             StructField("b", LongType()), StructField("col", StringType()),
             StructField("vals", BinaryType(), True),
@@ -2242,23 +2238,23 @@ def rank_blocked(sdf: SparkDataFrame, col_name: str, method: str = "average",
 
 
 # ------------------------------------------------------------------ #
-# pure-Column variants: Series-mode order ops                          #
+# pure-Column running count/sum: positions and token tapes            #
 # ------------------------------------------------------------------ #
-# A Series is a lazy Column over its anchor Frame, so it cannot route
-# through the DataFrame kernels above (those attach join-built carry
-# columns). Instead the SAME block decomposition is expressed as one
-# Column: block id from literal split points of the order key, the
-# local window partitioned by that block expression, and the
-# cross-block carry collected ONCE at expression-build time (≤P scalar
-# rows) and embedded as literals — the exact contract _split_bounds
-# already establishes. Every window below carries partitionBy(blk), so
-# no consumer of the expression ever executes a single-task global
-# window (reference kernels: window.pyx:447 roll_sum family,
-# algos.pyx rank_1d — sequential by construction; this is their
-# distributed re-expression).
+# Positional consumers (loc/iloc/take/equals/alignment keys) and the
+# global token tape of pack_sequences need a running count/sum as ONE
+# Column they can filter or join on, without rebinding a frame. The
+# block decomposition is expressed inline: block id from literal split
+# points of the order key, the local window partitioned by that block
+# expression, and the cross-block carry collected ONCE at
+# expression-build time (≤P scalar rows) and embedded as literals —
+# the exact contract _split_bounds already establishes. The window
+# carries partitionBy(blk), so no consumer of the expression ever
+# executes a single-task global window. Series order ops do NOT come
+# through here: they run the DataFrame kernels above over their anchor
+# frame (series.Series._run_order_kernel).
 
 
-def _carry_lookup(blk: Column, values: list, dtype: str | None = None) -> Column:
+def _carry_lookup(blk: Column, values: list) -> Column:
     """≤P-entry literal lookup: block id -> carried scalar.
 
     ``element_at`` over ONE literal array, not a ``when`` chain: a
@@ -2267,23 +2263,20 @@ def _carry_lookup(blk: Column, values: list, dtype: str | None = None) -> Column
     janino's 64 KB method limit and codegen falls back to interpreted;
     at cluster partition counts it would be catastrophic. The array
     form evaluates ``blk`` once and stays O(P)."""
-    def lit(v):
-        e = F.lit(v)
-        return e.cast(dtype) if dtype is not None and v is None else e
-
     if not values:
-        return lit(None)
-    return F.element_at(F.array(*[lit(v) for v in values]), blk.cast("int") + 1)
+        return F.lit(None)
+    return F.element_at(F.array(*[F.lit(v) for v in values]), blk.cast("int") + 1)
 
 
 def running_expr(sdf: SparkDataFrame, order_col: Column, value: Column,
                  kind: str, n_blocks: int | None = None) -> Column:
-    """Distributed running sum/count/min/max as a pure Column.
+    """Distributed running sum/count as a pure Column.
 
     Local running aggregate over the block window + per-block prefix
     carry (computed by one small aggregation at build time, embedded
-    as literals). The caller applies pandas' skipna null mask."""
-    aggf = {"sum": F.sum, "count": F.count, "min": F.min, "max": F.max}[kind]
+    as literals). A running sum stays NULL while every value so far
+    is NULL."""
+    aggf = {"sum": F.sum, "count": F.count}[kind]
     sdf = _pin_if_order(sdf, order_col)
     n = n_blocks or _n_blocks(sdf, lit=True)
     bounds = _split_bounds(sdf, order_col, n)
@@ -2296,212 +2289,28 @@ def running_expr(sdf: SparkDataFrame, order_col: Column, value: Column,
         carries.append(acc)
         t = tot.get(b)
         if t is not None:
-            if acc is None:
-                acc = t
-            elif kind in ("sum", "count"):
-                acc = acc + t
-                if isinstance(acc, int):
-                    # int64 literal wrap — same contract as the frame
-                    # kernel's carries (JVM/numpy two's-complement)
-                    acc = _wrap_i64(acc)
-            elif kind == "min":
-                acc = min(acc, t)
-            else:
-                acc = max(acc, t)
+            acc = t if acc is None else acc + t
+            if isinstance(acc, int):
+                # int64 literal wrap — same contract as the frame
+                # kernel's carries (JVM/numpy two's-complement)
+                acc = _wrap_i64(acc)
     w = (W.partitionBy(blk).orderBy(order_col)
          .rowsBetween(W.unboundedPreceding, W.currentRow))
     local = aggf(value).over(w)
     carry = _carry_lookup(blk, carries)
-    if kind in ("sum", "count"):
-        zero = F.lit(0)
-        out = F.coalesce(local, zero) + F.coalesce(carry, zero)
-        return out if kind == "count" else F.when(local.isNull() & carry.isNull(),
-                                                  F.lit(None)).otherwise(out)
-    if kind == "min":
-        return F.least(local, F.coalesce(carry, local))
-    return F.greatest(local, F.coalesce(carry, local))
+    zero = F.lit(0)
+    out = F.coalesce(local, zero) + F.coalesce(carry, zero)
+    return out if kind == "count" else F.when(local.isNull() & carry.isNull(),
+                                              F.lit(None)).otherwise(out)
 
 
-def cumprod_expr(sdf: SparkDataFrame, order_col: Column, value: Column,
-                 n_blocks: int | None = None) -> Column:
-    """Distributed running product: Σln|x| + sign parity + zero count
-    per block, literal prefix carries (SURVEY §2.5 cumprod idiom)."""
-    sdf = _pin_if_order(sdf, order_col)
-    n = n_blocks or _n_blocks(sdf, lit=True)
-    bounds = _split_bounds(sdf, order_col, n)
-    blk = _blk_expr(order_col, bounds)
-    nb = len(bounds) + 1
-    lneg = F.sum(F.when(value < 0, 1).otherwise(0))
-    lzero = F.sum(F.when(value == 0, 1).otherwise(0))
-    llog = F.sum(F.log(F.abs(value)))
-    rows = (sdf.groupBy(blk.alias("b"))
-            .agg(llog.alias("l"), lneg.alias("ng"), lzero.alias("z")).collect())
-    tot = {r["b"]: r for r in rows}
-    cl, cn, cz = [], [], []
-    al, an, az = 0.0, 0, 0
-    for b in range(nb):
-        cl.append(al); cn.append(an); cz.append(az)
-        r = tot.get(b)
-        if r is not None:
-            al += r["l"] or 0.0
-            an += r["ng"] or 0
-            az += r["z"] or 0
-    w = (W.partitionBy(blk).orderBy(order_col)
-         .rowsBetween(W.unboundedPreceding, W.currentRow))
-    z = F.lit(0)
-    negs = F.coalesce(lneg.over(w), z) + _carry_lookup(blk, cn)
-    zeros = F.coalesce(lzero.over(w), z) + _carry_lookup(blk, cz)
-    lg = F.coalesce(llog.over(w), F.lit(0.0)) + _carry_lookup(blk, cl)
-    sign = F.when(negs % 2 == 0, F.lit(1.0)).otherwise(F.lit(-1.0))
-    return F.when(zeros > 0, F.lit(0.0)).otherwise(sign * F.exp(lg))
-
-
-def shift_expr(sdf: SparkDataFrame, order_col: Column, value: Column,
-               periods: int, fill_value=None,
-               n_blocks: int | None = None) -> Column:
-    """Distributed shift as a pure Column: lag/lead inside the block;
-    the |periods| cross-boundary positions read literal arrays of the
-    neighboring blocks' edge values (|periods|·P rows collected once).
-    Positions shifted in from beyond the GLOBAL edge get fill_value —
-    and only those, so genuine nulls in the data pass through."""
-    if periods == 0:
-        return value
-    k = abs(periods)
-    sdf = _pin_if_order(sdf, order_col)
-    dtype = sdf.select(value.alias("__v__")).schema[0].dataType.simpleString()
-    n = n_blocks or _n_blocks(sdf, lit=True)
-    bounds = _split_bounds(sdf, order_col, n)
-    blk = _blk_expr(order_col, bounds)
-    nb = len(bounds) + 1
-    # the k rows at the relevant edge of every block, one filter job
-    edge_order = F.col("__o__").desc() if periods > 0 else F.col("__o__").asc()
-    edges = (sdf.select(blk.alias("b"), order_col.alias("__o__"), value.alias("__v__"))
-             .withColumn("__rn__", F.row_number().over(
-                 W.partitionBy("b").orderBy(edge_order)))
-             .filter(F.col("__rn__") <= k)
-             .collect())
-    edges.sort(key=lambda r: (r["b"], () if r["__o__"] is None else (r["__o__"],)))
-    arrs, pads = [], []
-    for b in range(nb):
-        if periods > 0:   # lag: the k global rows preceding block b's start
-            cand = [r["__v__"] for r in edges if r["b"] < b][-k:]
-            pad = k - len(cand)
-            arrs.append([None] * pad + cand)
-        else:             # lead: the k global rows following block b's end
-            cand = [r["__v__"] for r in edges if r["b"] > b][:k]
-            pad = k - len(cand)
-            arrs.append(cand + [None] * pad)
-        pads.append(pad)
-
-    def arr_lit(vals):
-        return F.array(*[F.lit(v).cast(dtype) for v in vals])
-
-    # one nested literal array indexed by block id — NOT a P-branch
-    # when-chain, which would re-inline the O(P) blk expression per
-    # branch and grow the plan O(P²) (see _carry_lookup)
-    arr = F.element_at(F.array(*[arr_lit(vals) for vals in arrs]),
-                       blk.cast("int") + 1)
-    wblk = W.partitionBy(blk).orderBy(order_col)
-    fill = F.lit(fill_value).cast(dtype)
-    if periods > 0:
-        j = F.row_number().over(wblk)
-        pad = _carry_lookup(blk, pads)
-        return (F.when(j <= pad, fill)
-                .when(j <= k, F.element_at(arr, j))
-                .otherwise(F.lag(value, k).over(wblk)))
-    jd = F.row_number().over(W.partitionBy(blk).orderBy(order_col.desc()))
-    pad = _carry_lookup(blk, pads)
-    return (F.when(jd <= pad, fill)
-            .when(jd <= k, F.element_at(arr, F.lit(k) - jd + 1))
-            .otherwise(F.lead(value, k).over(wblk)))
-
-
-def rank_expr(sdf: SparkDataFrame, value: Column, method: str = "average",
-              ascending: bool = True, pct: bool = False,
-              na_option: str = "keep",
-              n_blocks: int | None = None) -> Column:
-    """Distributed ungrouped rank as a pure Column (rank_blocked with
-    the per-block offsets folded to literals). Blocks range-partition
-    the VALUE; tie groups never straddle a boundary, so block-local
-    rank + literal prefix offsets compose exactly."""
-    if na_option not in ("keep", "top", "bottom"):
-        raise ValueError(f"na_option={na_option!r}")
-    nulls_ranked = na_option != "keep"
-    nulls_first = na_option == "top"
-    if ascending:
-        order = value.asc_nulls_first() if nulls_first else value.asc_nulls_last()
-    else:
-        order = value.desc_nulls_first() if nulls_first else value.desc_nulls_last()
-
-    dt = sdf.select(value.alias("__v__")).schema[0].dataType.simpleString()
-    if dt.startswith("timestamp"):
-        key = F.unix_micros(value.cast("timestamp")).cast("double")
-    elif dt == "date":
-        key = F.datediff(value, F.lit("1970-01-01")).cast("double")
-    elif any(dt.startswith(p) for p in
-             ("int", "bigint", "double", "float", "decimal", "smallint", "tinyint")):
-        key = value.cast("double")
-    else:
-        key = None
-    n = n_blocks or _n_blocks(sdf, lit=True)
-    bounds = _split_bounds(sdf, key, n) if key is not None else []
-    if bounds:
-        e = None
-        for b in bounds:
-            t = ((key < F.lit(b)) if not ascending else (key > F.lit(b))).cast("int")
-            e = t if e is None else e + t
-        null_blk = 0 if nulls_first else len(bounds)
-        blk = F.when(key.isNull(), F.lit(null_blk)).otherwise(e)
-    else:
-        blk = F.lit(0)
-    nb = len(bounds) + 1
-
-    cnt_expr = F.count(F.lit(1)) if nulls_ranked else F.count(value)
-    rows = (sdf.groupBy(blk.alias("b"))
-            .agg(cnt_expr.alias("c"), F.countDistinct(value).alias("nd"),
-                 F.max(F.when(value.isNull(), 1).otherwise(0)).alias("hn"))
-            .collect())
-    per = {r["b"]: r for r in rows}
-    offs, doffs = [], []
-    tot = dtot = 0
-    acc = dacc = 0
-    any_null = any((per.get(b)["hn"] or 0) for b in per)
-    for b in range(nb):
-        offs.append(acc)
-        doffs.append(dacc)
-        r = per.get(b)
-        if r is not None:
-            acc += r["c"] or 0
-            dacc += (r["nd"] or 0) + ((r["hn"] or 0) if nulls_ranked else 0)
-    tot = acc
-    dtot = dacc if not (nulls_ranked and any_null) else (
-        sum((per.get(b)["nd"] or 0) for b in per) + 1)
-
-    w = W.partitionBy(blk).orderBy(order)
-    w_first = W.partitionBy(blk).orderBy(order, F.col(I.ORDER_COL))
-    ties = F.count(F.lit(1) if nulls_ranked else F.when(value.isNotNull(), 1)) \
-        .over(W.partitionBy(blk, value))
-    off = _carry_lookup(blk, offs)
-    doff = _carry_lookup(blk, doffs)
-    if method == "min":
-        r = F.rank().over(w) + off
-    elif method == "dense":
-        r = F.dense_rank().over(w) + doff
-    elif method == "first":
-        r = F.row_number().over(w_first) + off
-    elif method == "max":
-        r = F.rank().over(w) + ties - 1 + off
-    elif method == "average":
-        lo = F.rank().over(w) + off
-        r = (lo.cast("double") + (lo + ties - 1).cast("double")) / 2.0
-    else:
-        raise ValueError(method)
-    r = r.cast("double")
-    if pct:
-        r = r / F.lit(float(dtot if method == "dense" else tot))
-    if not nulls_ranked:
-        r = F.when(value.isNull(), F.lit(None)).otherwise(r)
-    return r
+def position_expr(sdf: SparkDataFrame) -> Column:
+    """TRUE 0-based row position along the frame order as a pure
+    Column: the blocked running count of ``__order__`` minus one.
+    ``__order__`` itself is ``monotonically_increasing_id`` bits —
+    (partition << 33) + offset — NEVER a position on a multi-partition
+    frame. A window expression: project it before filtering on it."""
+    return running_expr(sdf, F.col(I.ORDER_COL), F.lit(1), "count") - 1
 
 
 # ------------------------------------------------------------------ #
@@ -2913,412 +2722,6 @@ def ewm_var_blocked(sdf: SparkDataFrame, order_col: Column, cols: list[str],
 
     out = _pass_evaluate(base, evaluate, in_schema, aligned)
     return out.drop(BLK, OC)
-
-class RollingEdges:
-    """Shared build-time state for blocked Series-mode rolling
-    expressions over one (frame, window-bounds, value) triple: the
-    literal split bounds and the cross-block boundary-value arrays are
-    computed by ONE job and reused by every aggregate the caller asks
-    for (sum/mean/.../var share a single edge collection instead of
-    re-running the build per expression)."""
-
-    def __init__(self, sdf: SparkDataFrame, order_col: Column, value: Column,
-                 lo: int, hi: int, n_blocks: int | None = None,
-                 monotonic_id: bool = False):
-        self._order = order_col
-        self.k_prev = max(-lo, 0)
-        self.k_next = max(hi, 0)
-        self.lo, self.hi = lo, hi
-        self.v = value.cast("double")
-        self._j = None  # in-block position exprs (monotonic shortcut)
-        self._jd = None
-        sdf = _pin_if_order(sdf, order_col)
-        self._sdf = sdf  # _edge_ref's single-block sampling fallback
-        n = n_blocks or _n_blocks(sdf, lit=True)
-        if monotonic_id:
-            # Monotonic order id: block id, in-block position AND edge
-            # membership are pure arithmetic on the id's (partition,
-            # offset) bits — the build is two SORT-FREE scan jobs
-            # (counts, edge filter) and the final plan carries no
-            # row_number windows at all.
-            import math
-
-            MASK = (1 << 33) - 1
-            sid = F.shiftright(order_col, 33)
-            off = order_col.bitwiseAND(F.lit(MASK))
-            stats = (sdf.groupBy(sid.alias("b"))
-                     .agg(F.count(F.lit(1)).alias("c"),
-                          F.min(off).alias("lo"), F.max(off).alias("hi"))
-                     .collect())
-            counts = {r["b"]: r["c"] for r in stats}
-            ids = sorted(counts)
-            if len(ids) > 256 or not all(
-                    r["lo"] == 0 and r["hi"] == r["c"] - 1 for r in stats):
-                # plan size grows with the per-partition CASE past the
-                # literal ceiling — and offset bits are a valid block
-                # position ONLY for gap-free (unfiltered) ids; either
-                # way use the percentile layout, which needs id ORDER
-                # only (review-verified failure: filtered-frame
-                # Series.rolling was silently wrong)
-                monotonic_id = False
-            total = sum(counts.values())
-            chunk = max(1, math.ceil(total / n))
-        if monotonic_id:
-            blk, cnts, bi, base_of = None, [], 0, {}
-            for s in ids:
-                c = counts[s]
-                nsub = max(1, math.ceil(c / chunk))
-                base_of[s] = bi
-                e = F.lit(bi) + F.floor(off / F.lit(chunk)).cast("int")
-                blk = F.when(sid == s, e) if blk is None else blk.when(sid == s, e)
-                cnts.extend(min(chunk, c - j * chunk) for j in range(nsub))
-                bi += nsub
-            self.blk = F.lit(0) if blk is None else blk.otherwise(F.lit(0))
-            self.nb = max(len(cnts), 1)
-            self.single = self.nb == 1 or (self.k_prev == 0 and self.k_next == 0)
-            local = F.pmod(off, F.lit(chunk))
-            self._j = (local + 1).cast("int")
-            if not self.single:
-                bcnt = _carry_lookup(self.blk, cnts)
-                self._jd = (bcnt - local).cast("int")
-                need = (local >= bcnt - max(self.k_prev, 1)) |                     (local < max(self.k_next, 1))
-                rows = (sdf.select(order_col.alias("o"), self.v.alias("v"))
-                        .filter(need).collect())
-                edges = []
-                for r in rows:
-                    o = r["o"]
-                    s, oo = o >> 33, o & MASK
-                    b = base_of[s] + oo // chunk
-                    loc = oo % chunk
-                    edges.append({"b": b, "o": o, "v": r["v"],
-                                  "rd": cnts[b] - loc, "ra": loc + 1})
-                edges.sort(key=lambda r: (r["b"], r["o"]))
-            else:
-                edges = []
-        else:
-            bounds = _split_bounds(sdf, order_col, n)
-            self.blk = _blk_expr(order_col, bounds)
-            self.nb = len(bounds) + 1
-            self.single = self.nb == 1 or (self.k_prev == 0 and self.k_next == 0)
-            if not self.single:
-                # one job: every block's boundary rows (≤(k_prev+k_next)·P)
-                sel = sdf.select(self.blk.alias("b"), order_col.alias("o"),
-                                 self.v.alias("v"))
-                rd = F.row_number().over(W.partitionBy("b").orderBy(F.col("o").desc()))
-                ra = F.row_number().over(W.partitionBy("b").orderBy(F.col("o").asc()))
-                edges = (sel.withColumn("rd", rd).withColumn("ra", ra)
-                         .filter((F.col("rd") <= self.k_prev)
-                                 | (F.col("ra") <= self.k_next))
-                         .collect())
-                edges.sort(key=lambda r: (r["b"], () if r["o"] is None else (r["o"],)))
-        if self.single:
-            return
-        # driver-chained deques: the k_prev rows globally preceding
-        # each block / the k_next rows following it — exact under any
-        # block-size layout (a tiny block's tail is the whole block)
-        self.prev_arr: dict[int, list] = {}
-        run: list = []
-        for b in range(self.nb):
-            self.prev_arr[b] = list(run[-self.k_prev:]) if self.k_prev else []
-            tail = [r["v"] for r in edges if r["b"] == b and r["rd"] <= self.k_prev]
-            run.extend(tail)
-            run = run[-self.k_prev:] if self.k_prev else []
-        self.next_arr: dict[int, list] = {}
-        run = []
-        for b in range(self.nb - 1, -1, -1):
-            self.next_arr[b] = list(run[:self.k_next]) if self.k_next else []
-            head = [r["v"] for r in edges if r["b"] == b and r["ra"] <= self.k_next]
-            run = head + run
-            run = run[:self.k_next] if self.k_next else []
-
-    # -- shared expression pieces -------------------------------------
-    # Edge values ship as ONE flat literal array (all blocks
-    # concatenated at a fixed stride, short blocks padded with nulls)
-    # indexed arithmetically by block id. A per-block CASE of array
-    # literals is semantically identical but multiplies Catalyst
-    # analysis cost by the block count per aggregate (measured:
-    # minutes of driver time on a 4-aggregate assign); padding nulls
-    # are inert because every consumer is skipna.
-    def _flat(self, per: dict[int, list], k: int, lead_pad: bool, f=None) -> Column:
-        vals: list = []
-        for b in range(self.nb):
-            xs = per[b] if f is None else [None if x is None else f(x)
-                                           for x in per[b]]
-            pad = [None] * (k - len(xs))
-            vals.extend(pad + xs if lead_pad else xs + pad)
-        return F.array(*[F.lit(x).cast("double") for x in vals])
-
-    def _jpos(self):
-        j = self._j if self._j is not None else \
-            F.row_number().over(W.partitionBy(self.blk).orderBy(self._order))
-        jd = self._jd if self._jd is not None else \
-            F.row_number().over(W.partitionBy(self.blk).orderBy(self._order.desc()))
-        return j, jd
-
-    def _slices(self, f=None) -> list[Column]:
-        j, jd = self._jpos()
-        out = []
-        if self.k_prev:
-            k = self.k_prev
-            ap = self._flat(self.prev_arr, k, lead_pad=True, f=f)
-            m = F.greatest(F.lit(k) - (j - 1), F.lit(0))
-            # last m slots of this block's k-wide stripe (front-padded)
-            out.append(F.when(m > 0, F.slice(ap, self.blk * k + (F.lit(k) - m) + 1, m))
-                       .otherwise(F.array().cast("array<double>")))
-        if self.k_next:
-            k = self.k_next
-            an = self._flat(self.next_arr, k, lead_pad=False, f=f)
-            m = F.greatest(F.lit(k) - (jd - 1), F.lit(0))
-            out.append(F.when(m > 0, F.slice(an, self.blk * k + 1, m))
-                       .otherwise(F.array().cast("array<double>")))
-        return out
-
-    def _w_loc(self):
-        return (W.partitionBy(self.blk).orderBy(self._order)
-                .rowsBetween(self.lo, self.hi))
-
-    @staticmethod
-    def _s_cnt(sl):
-        return F.size(F.filter(sl, lambda x: x.isNotNull()))
-
-    @staticmethod
-    def _s_sum(sl):
-        return F.aggregate(sl, F.lit(0.0), lambda a, x: a + F.coalesce(x, F.lit(0.0)))
-
-    def _count(self, slices):
-        cnt = F.count(self.v).over(self._w_loc())
-        for sl in slices:
-            cnt = cnt + self._s_cnt(sl)
-        return cnt
-
-    def _phys_rows(self) -> Column:
-        """Physical rows in the window (pandas guards ``count`` on row
-        presence, not non-null observations): local rows + the number
-        of borrowed positions actually backed by real rows (padding
-        beyond the global frame edge does not count)."""
-        rows = F.count(F.lit(1)).over(self._w_loc())
-        if self.single:
-            return rows
-        j, jd = self._jpos()
-        if self.k_prev:
-            m = F.greatest(F.lit(self.k_prev) - (j - 1), F.lit(0))
-            avail = _carry_lookup(self.blk, [len(self.prev_arr[b])
-                                             for b in range(self.nb)])
-            rows = rows + F.least(m, avail)
-        if self.k_next:
-            m = F.greatest(F.lit(self.k_next) - (jd - 1), F.lit(0))
-            avail = _carry_lookup(self.blk, [len(self.next_arr[b])
-                                             for b in range(self.nb)])
-            rows = rows + F.least(m, avail)
-        return rows
-
-    # -- public ---------------------------------------------------------
-    def expr(self, kind: str, min_periods: int) -> Column:
-        """sum/count/mean/min/max with pandas skipna + min_periods."""
-        if kind not in ("sum", "count", "mean", "min", "max"):
-            raise ValueError(f"rolling_expr kind {kind!r}")
-        if self.single:
-            w = (W.partitionBy(self.blk).orderBy(self._order)
-                 .rowsBetween(self.lo, self.hi))
-            cnt = F.count(self.v).over(w)
-            if kind == "count":
-                # pandas guards count on PHYSICAL rows, not non-nulls
-                rows = F.count(F.lit(1)).over(w)
-                if min_periods > 0:
-                    return F.when(rows >= min_periods,
-                                  cnt.cast("double")).otherwise(F.lit(None))
-                return cnt.cast("double")
-            elif kind == "sum":
-                out = F.when(cnt > 0, F.sum(self.v).over(w)).otherwise(F.lit(None))
-            elif kind == "mean":
-                out = F.avg(self.v).over(w)
-            elif kind == "min":
-                out = F.min(self.v).over(w)
-            else:
-                out = F.max(self.v).over(w)
-            if min_periods > 0:
-                out = F.when(cnt >= min_periods, out).otherwise(F.lit(None))
-            return out
-        slices = self._slices()
-        cnt = self._count(slices)
-        if kind == "count":
-            out = cnt.cast("double")
-            if min_periods > 0:
-                out = F.when(self._phys_rows() >= min_periods, out) \
-                    .otherwise(F.lit(None))
-            return out
-        if kind in ("sum", "mean"):
-            s = F.coalesce(F.sum(self.v).over(self._w_loc()), F.lit(0.0))
-            for sl in slices:
-                s = s + self._s_sum(sl)
-            out = F.when(cnt > 0, s if kind == "sum" else s / cnt).otherwise(F.lit(None))
-        else:
-            fold = F.least if kind == "min" else F.greatest
-            out = (F.min(self.v) if kind == "min" else F.max(self.v)).over(self._w_loc())
-            for sl in slices:
-                out = fold(out, F.array_min(sl) if kind == "min" else F.array_max(sl))
-        if min_periods > 0:
-            out = F.when(cnt >= min_periods, out).otherwise(F.lit(None))
-        return out
-
-    def _edge_ref(self) -> float:
-        """In-data centering reference from the already-collected edge
-        values — no extra job when edges exist. Variance is shift-
-        invariant, so any finite constant is exact; centering near the
-        data kills the |mean| ≫ std cancellation of raw (Σx, Σx²).
-        Single-block layouts (nb==1 — e.g. defaultParallelism=1 —
-        regardless of frame size) collect no edges, so they sample ONE
-        deterministic row instead of silently keeping raw sums at
-        ref=0.0 (r8 ADVICE low, distwindow.py:1920)."""
-        import math
-
-        for per in (getattr(self, "prev_arr", None),
-                    getattr(self, "next_arr", None)):
-            if not per:
-                continue
-            for b in range(self.nb):
-                for x in per.get(b, []):
-                    if x is not None and math.isfinite(float(x)):
-                        return float(x)
-        rows = (self._sdf.select(self.v.alias("__v__"),
-                                 self._order.alias("__o__"))
-                .orderBy("__o__").limit(256).collect())
-        for r in rows:
-            v = r["__v__"]
-            if v is not None and math.isfinite(v):
-                return float(v)
-        return 0.0
-
-    def var_expr(self, ddof: int, min_periods: int, std: bool = False) -> Column:
-        """Rolling sample variance from CENTERED (Σx', Σx'², n), x' =
-        x − edge-ref (see _edge_ref; r8 — raw sums cancel at
-        |mean| ≫ std). The squared edge arrays derive from the same
-        collected values driver-side, so var/std reuse this builder's
-        single edge job."""
-        ref = self._edge_ref()
-        vc = self.v - F.lit(ref)
-        v2 = vc * vc
-        if self.single:
-            w = (W.partitionBy(self.blk).orderBy(self._order)
-                 .rowsBetween(self.lo, self.hi))
-            n = F.count(vc).over(w)
-            s1 = F.coalesce(F.sum(vc).over(w), F.lit(0.0))
-            s2 = F.coalesce(F.sum(v2).over(w), F.lit(0.0))
-        else:
-            slices = self._slices(lambda x: float(x) - ref)
-            sq_slices = self._slices(lambda x: (float(x) - ref) ** 2)
-            n = self._count(slices)
-            s1 = F.coalesce(F.sum(vc).over(self._w_loc()), F.lit(0.0))
-            for sl in slices:
-                s1 = s1 + self._s_sum(sl)
-            s2 = F.coalesce(F.sum(v2).over(self._w_loc()), F.lit(0.0))
-            for sl in sq_slices:
-                s2 = s2 + self._s_sum(sl)
-        out = F.when(n > ddof, F.greatest(
-            (s2 - s1 * s1 / n) / (n - F.lit(ddof)), F.lit(0.0)))
-        if min_periods > 0:
-            out = F.when(n >= min_periods, out).otherwise(F.lit(None))
-        return F.sqrt(out) if std else out
-
-
-def rolling_expr(sdf: SparkDataFrame, order_col: Column, value: Column,
-                 lo: int, hi: int, kind: str, min_periods: int,
-                 n_blocks: int | None = None) -> Column:
-    """Blocked ungrouped ROLLING aggregate as a pure Column — the
-    Series-mode analog of ``rolling_blocked`` (composable into
-    assign()/arithmetic, never a single global window). One-shot
-    convenience wrapper over ``RollingEdges``; callers needing several
-    aggregates of the same window should share one builder."""
-    return RollingEdges(sdf, order_col, value, lo, hi, n_blocks).expr(
-        kind, min_periods)
-
-
-class RunningStats:
-    """Shared build-time state for Series.expanding aggregates: ONE
-    aggregation job collects per-block (Σv, n, min, max, Σv², rows)
-    totals and the driver folds them into literal prefix carries —
-    every aggregate (and the min_periods guards) then derives from
-    this single build instead of re-running a job per expression."""
-
-    def __init__(self, sdf: SparkDataFrame, order_col: Column, value: Column,
-                 n_blocks: int | None = None):
-        sdf = _pin_if_order(sdf, order_col)
-        self._order = order_col
-        self.v = value.cast("double")
-        n = n_blocks or _n_blocks(sdf, lit=True)
-        bounds = _split_bounds(sdf, order_col, n)
-        self.blk = _blk_expr(order_col, bounds)
-        nb = len(bounds) + 1
-        self.nb = nb
-        v = self.v
-        rows = (sdf.groupBy(self.blk.alias("b"))
-                .agg(F.sum(v).alias("s"), F.count(v).alias("c"),
-                     F.min(v).alias("mn"), F.max(v).alias("mx"),
-                     F.sum(v * v).alias("q"), F.count(F.lit(1)).alias("r"))
-                .collect())
-        per = {r["b"]: r for r in rows}
-        self.c_sum: list = []
-        self.c_cnt: list = []
-        self.c_min: list = []
-        self.c_max: list = []
-        self.c_q: list = []
-        self.c_rows: list = []
-        S = Q = MN = MX = None
-        C = R = 0
-        for b in range(nb):
-            self.c_sum.append(S)
-            self.c_cnt.append(C)
-            self.c_min.append(MN)
-            self.c_max.append(MX)
-            self.c_q.append(Q)
-            self.c_rows.append(R)
-            rr = per.get(b)
-            if rr is None:
-                continue
-            if rr["s"] is not None:
-                S = rr["s"] + (S or 0.0)
-            if rr["q"] is not None:
-                Q = rr["q"] + (Q or 0.0)
-            C += rr["c"]
-            R += rr["r"]
-            if rr["mn"] is not None:
-                MN = rr["mn"] if MN is None else min(MN, rr["mn"])
-            if rr["mx"] is not None:
-                MX = rr["mx"] if MX is None else max(MX, rr["mx"])
-
-    def _w(self):
-        return (W.partitionBy(self.blk).orderBy(self._order)
-                .rowsBetween(W.unboundedPreceding, W.currentRow))
-
-    def _sumlike(self, local: Column, carries: list) -> Column:
-        carry = _carry_lookup(self.blk, carries)
-        z = F.lit(0.0)
-        return F.when(local.isNull() & carry.isNull(), F.lit(None)) \
-            .otherwise(F.coalesce(local, z) + F.coalesce(carry, z))
-
-    def sum(self) -> Column:
-        return self._sumlike(F.sum(self.v).over(self._w()), self.c_sum)
-
-    def sumsq(self) -> Column:
-        return self._sumlike(F.sum(self.v * self.v).over(self._w()), self.c_q)
-
-    def count(self) -> Column:
-        return F.count(self.v).over(self._w()) + _carry_lookup(self.blk, self.c_cnt)
-
-    def rows(self) -> Column:
-        """Running PHYSICAL row count (pandas guards expanding.count on
-        row presence, not observations)."""
-        return F.count(F.lit(1)).over(self._w()) + _carry_lookup(self.blk, self.c_rows)
-
-    def min(self) -> Column:
-        local = F.min(self.v).over(self._w())
-        carry = _carry_lookup(self.blk, self.c_min)
-        return F.least(local, F.coalesce(carry, local))
-
-    def max(self) -> Column:
-        local = F.max(self.v).over(self._w())
-        carry = _carry_lookup(self.blk, self.c_max)
-        return F.greatest(local, F.coalesce(carry, local))
 
 
 # ---------------------------------------------------------------------------

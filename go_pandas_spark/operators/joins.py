@@ -367,11 +367,9 @@ def _align_keys(frame: Frame):
     after independent repartitions (fuzz-caught)."""
     if frame.index_spark_cols:
         return frame._sdf, frame.index_spark_cols
-    from .distwindow import running_expr
+    from .distwindow import position_expr
 
-    sdf = frame._sdf.withColumn(
-        "__apos__",
-        running_expr(frame._sdf, F.col(I.ORDER_COL), F.lit(1), "count") - 1)
+    sdf = frame._sdf.withColumn("__apos__", position_expr(frame._sdf))
     return sdf, ["__apos__"]
 
 

@@ -322,76 +322,71 @@ class Series:
         ``categories`` = the dictionary, plus rename/add via map."""
         return _CatAccessor(self)
 
-    # -- order-dependent (blocked distributed expressions) -------------
-    # A Series stays a pure Column over its anchor frame, so order ops
-    # route through operators/distwindow.py's EXPRESSION builders: block
-    # id from literal split points, per-block window, literal cross-block
-    # carries (collected once at build time). No consumer ever executes
-    # a single-task global window (reference window.pyx / algos.pyx
-    # kernels are sequential by construction; this is their scale path).
-    def _escalate_order_op(self, apply_kernel):
-        """Frame-mode escalation for Series order ops past the literal
-        256-block cap (see window._series_escalates): the Series
+    # -- order-dependent (blocked frame kernels) ------------------------
+    # Every ungrouped order op (shift/diff/pct_change/cum*/rank, and
+    # Series.rolling/expanding in window.py) runs the SAME
+    # operators/distwindow.py DataFrame kernel the frame API runs, over
+    # the Series' anchor frame — one implementation per op. No consumer
+    # ever executes a single-task global window (reference window.pyx /
+    # algos.pyx kernels are sequential by construction; this is their
+    # scale path).
+    def _run_order_kernel(self, apply_kernel):
+        """Run a frame-mode order kernel for this Series: the Series
         expression lands in an internal column of the ANCHOR frame,
-        ``apply_kernel(sdf, tmp)`` replaces it via the uncapped
+        ``apply_kernel(sdf, tmp)`` replaces it via the blocked
         broadcast-table kernel, the augmented sdf becomes the anchor's
         plan (rows and order ids unchanged), and the result Series
         reads the internal column — assign()/to_frame()/filters keep
         working unchanged.
 
         SIDE EFFECT (deliberate, documented): the anchor Frame's _sdf
-        is rebound IN PLACE — even if the result Series is discarded,
-        the anchor keeps the pinned blocked plan plus one internal
-        ``__index_serw*`` column. This is what keeps every subsequent
-        op on the same frame join-free (same anchor ⇒ pure column
-        composition); a copy-on-write anchor would force an index
-        alignment JOIN whenever the escalated result is combined with
-        the original frame's columns — the common case. The cost is
-        one stored copy (released by ``clear_cache()``) and an extra
-        internal column that public projections never see."""
-        from .operators.distwindow import consume_chained, mark_blocked_output
+        is rebound IN PLACE, at every parallelism — even if the result
+        Series is discarded, the anchor keeps the blocked plan plus one
+        internal ``__index_serw*`` column. This is what keeps every
+        subsequent op on the same frame join-free (same anchor ⇒ pure
+        column composition); a copy-on-write anchor would force an
+        index alignment JOIN whenever the result is combined with the
+        original frame's columns — the common case. The cost is the
+        kernel's stored input (released by ``clear_cache()``) and an
+        extra internal column that public projections never see.
+        Internal callers that project from ``self._frame._sdf`` must
+        therefore run the order op FIRST and read ``_sdf`` after it.
+
+        When an earlier order op already rebound the anchor, its plan
+        is cut with ``localCheckpoint(eager=True)`` instead of being
+        pinned under the next kernel's pin: nested pins keep every
+        cached lineage in the plan, and Spark renders each nested
+        cached AQE plan twice (final and initial), so the plan string
+        Spark builds for each action grew ~4× per op — 16 ranks on one
+        anchor ran the JVM out of heap in ``explainString``. The cut
+        keeps it flat at any chain length (the operators/dedup.py
+        iteration recipe, same executor-loss caveat)."""
+        from .operators.distwindow import mark_blocked_output
         from .window import _series_tmp
 
         fr = self._frame
+        if getattr(fr, "_blocked_out", False):
+            fr._sdf = fr._sdf.localCheckpoint(eager=True)
+            fr._blocked_out = False
         tmp = _series_tmp()
-        sdf = consume_chained(fr).withColumn(tmp, self._scol)
-        fr._sdf = apply_kernel(sdf, tmp)
+        fr._sdf = apply_kernel(fr._sdf.withColumn(tmp, self._scol), tmp)
         mark_blocked_output(fr)
         return self._with_scol(F.col(tmp))
-
-    def _order_op_escalates(self) -> bool:
-        from .window import _series_escalates
-
-        return _series_escalates(self._frame._sdf)
 
     def shift(self, periods: int = 1, fill_value=None) -> "Series":
         if periods == 0:
             return self._with_scol(self._scol)
-        if self._order_op_escalates():
-            # fill_value rides the blocked kernel too (r10, closing r9
-            # VERDICT missing #1): shift_blocked fills via a
-            # beyond-edge probe (lag/lead of a literal is null iff the
-            # offset row does not exist), so genuine data nulls pass
-            # through untouched — the pandas contract.
-            from .operators.distwindow import shift_blocked
+        # fill_value rides the blocked kernel too (r10, closing r9
+        # VERDICT missing #1): shift_blocked fills via a beyond-edge
+        # probe (lag/lead of a literal is null iff the offset row does
+        # not exist), so genuine data nulls pass through untouched —
+        # the pandas contract.
+        from .operators.distwindow import shift_blocked
 
-            return self._escalate_order_op(
-                lambda sdf, tmp: shift_blocked(sdf, F.col(I.ORDER_COL),
-                                               periods, [tmp],
-                                               fill_value=fill_value,
-                                               monotonic_id=True))
-        if abs(periods) > 1024:
-            # the blocked path would collect |periods|·P edge rows as
-            # literals; past this bound keep the exact single-window plan
-            from pyspark.sql import Window as W
-
-            w = W.orderBy(I.ORDER_COL)
-            fn = F.lag if periods >= 0 else F.lead
-            return self._with_scol(fn(self._scol, abs(periods), fill_value).over(w))
-        from .operators.distwindow import shift_expr
-
-        return self._with_scol(shift_expr(
-            self._frame._sdf, F.col(I.ORDER_COL), self._scol, periods, fill_value))
+        return self._run_order_kernel(
+            lambda sdf, tmp: shift_blocked(sdf, F.col(I.ORDER_COL), periods,
+                                           [tmp], fill_value=fill_value,
+                                           monotonic_id=True))
 
     def diff(self, periods: int = 1) -> "Series":
         return self._binop(lambda a, b: a - b, self.shift(periods))
@@ -401,23 +396,16 @@ class Series:
         return self._with_scol(I.pct_change_col(self._scol, prev._scol))
 
     def _cum(self, kind: str) -> "Series":
-        if self._order_op_escalates():
-            from .operators.distwindow import expanding_blocked
+        from .operators.distwindow import expanding_blocked
 
-            orig = self._scol
-            out = self._escalate_order_op(
-                lambda sdf, tmp: expanding_blocked(
-                    sdf, F.col(I.ORDER_COL), {tmp: (tmp, kind)}))
-            # pandas cum* masks null positions while accumulating past
-            return out._with_scol(
-                F.when(orig.isNull(), F.lit(None)).otherwise(out._scol))
-        from .operators.distwindow import running_expr
-
-        run = running_expr(self._frame._sdf, F.col(I.ORDER_COL), self._scol, kind)
+        orig = self._scol
+        out = self._run_order_kernel(
+            lambda sdf, tmp: expanding_blocked(
+                sdf, F.col(I.ORDER_COL), {tmp: (tmp, kind)}))
         # pandas cum* leaves NaN at null positions and keeps
         # accumulating past them (skipna) — mask the running value
-        return self._with_scol(
-            F.when(self._scol.isNull(), F.lit(None)).otherwise(run))
+        return out._with_scol(
+            F.when(orig.isNull(), F.lit(None)).otherwise(out._scol))
 
     def cumsum(self) -> "Series":
         return self._cum("sum")
@@ -429,41 +417,33 @@ class Series:
         return self._cum("min")
 
     def cumprod(self) -> "Series":
-        from .operators.distwindow import cumprod_expr
-
-        run = cumprod_expr(self._frame._sdf, F.col(I.ORDER_COL), self._scol)
         # integer input -> integer output like pandas: the blocked
         # kernel runs in log space (float), so round back. Exact while
         # the running product fits double's 53-bit mantissa; near the
-        # int64 edge pandas itself wraps (documented delta).
+        # int64 edge pandas itself wraps (documented delta). The dtype
+        # is read BEFORE the kernel rebinds the anchor's plan.
         dt = self._frame._sdf.select(self._scol.alias("__v__")) \
             .schema[0].dataType.simpleString()
+        out = self._cum("prod")
         if dt in ("bigint", "int", "smallint", "tinyint"):
-            run = F.round(run).cast("long")
-        return self._with_scol(
-            F.when(self._scol.isNull(), F.lit(None)).otherwise(run))
+            out = out._with_scol(F.round(out._scol).cast("long"))
+        return out
 
     def rank(self, method: str = "average", ascending: bool = True, pct: bool = False, na_option: str = "keep") -> "Series":
-        if self._order_op_escalates():
-            from .operators.distwindow import rank_blocked
+        from .operators.distwindow import rank_blocked
 
-            return self._escalate_order_op(
-                lambda sdf, tmp: rank_blocked(sdf, tmp, method=method,
-                                              ascending=ascending, pct=pct,
-                                              na_option=na_option))
-        from .operators.distwindow import rank_expr
-
-        return self._with_scol(rank_expr(
-            self._frame._sdf, self._scol, method=method, ascending=ascending,
-            pct=pct, na_option=na_option))
+        return self._run_order_kernel(
+            lambda sdf, tmp: rank_blocked(sdf, tmp, method=method,
+                                          ascending=ascending, pct=pct,
+                                          na_option=na_option))
 
     # -- moving windows ------------------------------------------------
     def rolling(self, window, min_periods: int | None = None,
                 center: bool = False):
-        """``s.rolling(n)`` (``core/window.py:59``): blocked pure-
-        Column expressions — composable into assign(), never a global
-        window. Decomposable aggs (sum/mean/min/max/count/var/std);
-        median/quantile/apply live on the frame API."""
+        """``s.rolling(n)`` (``core/window.py:59``): the blocked frame
+        kernel over the anchor frame — composable into assign(), never
+        a global window. Decomposable aggs (sum/mean/min/max/count/
+        var/std); median/quantile/apply live on the frame API."""
         from .window import SeriesRolling
 
         return SeriesRolling(self, window, min_periods=min_periods,
@@ -628,13 +608,14 @@ class Series:
 
     def _monotonic(self, op) -> bool:
         """Lag comparison + bool-and (``algos.pyx:796``). The lag rides
-        the blocked shift expression (operators/distwindow.shift_expr),
+        the blocked shift kernel (operators/distwindow.shift_blocked),
         not a global unpartitioned window — the comparison feeds a
         boolean reduction, so the blocked per-partition plan is exact
-        and scale-safe."""
+        and scale-safe. The shift runs first: it rebinds the anchor's
+        plan, which the projection must then read."""
+        prev = self.shift(1)
         sdf = self._frame._sdf.select(
-            self._scol.alias("__x__"),
-            self.shift(1)._scol.alias("__p__"))
+            self._scol.alias("__x__"), prev._scol.alias("__p__"))
         ok = F.min(F.when(F.col("__p__").isNull() | op(F.col("__x__"), F.col("__p__")), 1).otherwise(0))
         return bool(sdf.agg(ok.alias("v")).first()["v"])
 
@@ -681,10 +662,11 @@ class Series:
     def autocorr(self, lag: int = 1):
         """corr with lagged self (``pandas/core/series.py:2028``) —
         the lag is projected first (window inside agg is illegal);
-        the lag itself rides the blocked shift expression."""
+        the lag itself rides the blocked shift kernel, which rebinds
+        the anchor's plan — so it runs before ``_sdf`` is read."""
+        lagged = self.shift(lag)
         sdf = self._frame._sdf.select(
-            self._scol.alias("__x__"),
-            self.shift(lag)._scol.alias("__l__"))
+            self._scol.alias("__x__"), lagged._scol.alias("__l__"))
         return sdf.agg(F.corr("__x__", "__l__").alias("v")).first()["v"]
 
     def unique(self) -> list:
@@ -1148,9 +1130,9 @@ class Series:
             cond = F.col(I.index_col(0)) == F.lit(label)
             base = f._sdf
         else:
-            from .operators.distwindow import running_expr
+            from .operators.distwindow import position_expr
 
-            pos = running_expr(f._sdf, F.col(I.ORDER_COL), F.lit(1), "count") - 1
+            pos = position_expr(f._sdf)
             # window expressions cannot live in WHERE — project first
             base = f._sdf.withColumn("__pos__", pos)
             cond = F.col("__pos__") == F.lit(label)

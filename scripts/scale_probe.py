@@ -56,8 +56,15 @@ def main() -> None:
         results[name] = {"sec": round(dt, 2), "rows_per_s": int(n / dt)}
         sys.stderr.write(f"{name}: {dt:.2f}s  ({int(n/dt):,} rows/s)\n")
 
-    probe("cumsum_global", lambda: f.assign(c=f["v"].cumsum()))
-    probe("shift_diff_global", lambda: f.assign(d=f["v"].diff(3)))
+    # A Series order op rebinds its anchor frame's plan in place, so
+    # each Series probe gets its own Frame over the persisted input —
+    # later probes on ``f`` must not inherit its internal column.
+    def series_probe(op):
+        g = gp.Frame(f._sdf)
+        return lambda: g.assign(o=op(g["v"]))
+
+    probe("cumsum_global", series_probe(lambda s: s.cumsum()))
+    probe("shift_diff_global", series_probe(lambda s: s.diff(3)))
     probe("rolling100_sum_global", lambda: f[["v"]].rolling(100).sum())
     # r9: rolling's VALUE-derived layout (forced by filtering, which
     # leaves order-id gaps) rides broadcast block tables — uncapped

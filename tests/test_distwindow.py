@@ -251,6 +251,53 @@ def test_series_cumprod_blocked_and_correct(spark):
     assert np.allclose(got, exp, equal_nan=True, rtol=1e-9, atol=1e-12)
 
 
+def test_series_expanding_var_std_general_ddof(spark):
+    """Series expanding var/std at ddof 0 and 2 run the frame
+    ``Expanding.moments`` pass over the anchor frame: pandas parity
+    with nulls, under both min_periods guards."""
+    rng = np.random.RandomState(23)
+    n = 3000
+    v = rng.normal(20, 3, n)
+    v[rng.rand(n) < 0.1] = np.nan
+    pdf = pd.DataFrame({"k": np.arange(n), "v": v})
+    for ddof in (0, 2):
+        f = gp.Frame(spark.createDataFrame(pdf).repartition(16)).sort_values("k")
+        s = f["v"]
+        out = f.assign(**{f"{stat}{minp}": getattr(s.expanding(minp), stat)(ddof=ddof)
+                          for stat in ("var", "std") for minp in (1, 3)})
+        assert any("serw" in c for c in f._sdf.columns)
+        assert _no_unpartitioned_window(out._sdf)
+        got = out.to_pandas().sort_values("k").reset_index(drop=True)
+        for stat in ("var", "std"):
+            for minp in (1, 3):
+                exp = getattr(pdf["v"].expanding(minp), stat)(ddof=ddof)
+                assert np.allclose(got[f"{stat}{minp}"], exp, rtol=1e-9,
+                                   atol=1e-12, equal_nan=True), (stat, ddof, minp)
+
+
+def test_series_shift_past_many_blocks(spark):
+    """|periods| far beyond one block's span (3000 rows over 16
+    partitions): shift_blocked borrows across every block it needs —
+    pandas parity for lag, lead with fill_value and diff, and no
+    single-task window."""
+    rng = np.random.RandomState(29)
+    n = 3000
+    v = rng.normal(0, 1, n)
+    v[rng.rand(n) < 0.1] = np.nan
+    pdf = pd.DataFrame({"k": np.arange(n), "v": v})
+    f = gp.Frame(spark.createDataFrame(pdf).repartition(16)).sort_values("k")
+    s = f["v"]
+    out = f.assign(lag=s.shift(2000),
+                   lead=s.shift(-2000, fill_value=-1.5),
+                   d=s.diff(2000))
+    assert _no_unpartitioned_window(out._sdf)
+    got = out.to_pandas().sort_values("k").reset_index(drop=True)
+    assert np.allclose(got["lag"], pdf["v"].shift(2000), equal_nan=True)
+    assert np.allclose(got["lead"], pdf["v"].shift(-2000, fill_value=-1.5),
+                       equal_nan=True)
+    assert np.allclose(got["d"], pdf["v"].diff(2000), equal_nan=True)
+
+
 def test_series_shift_diff_blocked_and_correct(frame, pdf):
     s = frame["x"]
     for name, gs, es in [
@@ -444,10 +491,9 @@ def test_series_rolling_battery_matches_pandas(spark):
 
 
 def test_series_rolling_plan_is_blocked(spark):
-    """Expression-mode rolling: Catalyst extracts the literal block-id
-    expression into a projected partition column (`_wN`), so check
-    that every window spec IS partitioned — an unpartitioned spec
-    would lead with the order column."""
+    """Series rolling runs the blocked frame kernel: check that every
+    window spec IS partitioned (by the block id) — an unpartitioned
+    spec would lead with the order column."""
     pdf = pd.DataFrame({"k": np.arange(800), "x": np.arange(800, dtype=float)})
     f = gp.Frame(spark.createDataFrame(pdf).repartition(8)).sort_values("k")
     out = f.assign(r=f["x"].rolling(5).sum())
@@ -517,30 +563,35 @@ def test_series_expanding_count_min_periods_physical_rows(spark):
 
 
 def test_expr_kernels_high_block_count_plan_stays_linear(spark):
-    """running_expr / shift_expr at P=150 blocks: the literal carry
+    """running_expr / shift_blocked at P=150 blocks: the literal carry
     lookups must be ONE element_at over an array (O(P) plan), not a
     P-branch CASE re-inlining the O(P) block-id expression per branch
-    (O(P²) — overflows janino's 64 KB method limit)."""
+    (O(P²) — overflows janino's 64 KB method limit); the shift kernel's
+    plan must stay linear in the block count too."""
     from pyspark.sql import functions as F
 
-    from go_pandas_spark.operators.distwindow import running_expr, shift_expr
+    from go_pandas_spark.operators.distwindow import running_expr, shift_blocked
 
     sdf = (spark.range(0, 3000)
            .withColumn("v", (F.col("id") * 3 % 7).cast("double")))
     cum = running_expr(sdf, F.col("id"), F.col("v"), "sum", n_blocks=150)
-    sh = shift_expr(sdf, F.col("id"), F.col("v"), 2, n_blocks=150)
-    out = sdf.select("id", cum.alias("c"), sh.alias("s"))
+    out = sdf.select("id", cum.alias("c"))
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert len(plan) < 150_000, f"plan grew to {len(plan)} chars — quadratic re-inline?"
     got = out.orderBy("id").toPandas()
     v = got["id"].to_numpy() * 3 % 7
     assert np.allclose(got["c"].to_numpy(), np.cumsum(v.astype(float)))
+    sh = shift_blocked(sdf.withColumn("s", F.col("v")), F.col("id"), 2,
+                       ["s"], n_blocks=150)
+    plan = sh._jdf.queryExecution().optimizedPlan().toString()
+    assert len(plan) < 150_000, f"plan grew to {len(plan)} chars — quadratic re-inline?"
+    got_s = sh.orderBy("id").toPandas()
     exp_s = pd.Series(v.astype(float)).shift(2)
-    assert np.allclose(got["s"].to_numpy(), exp_s.to_numpy(), equal_nan=True)
+    assert np.allclose(got_s["s"].to_numpy(), exp_s.to_numpy(), equal_nan=True)
 
 
 def test_is_monotonic_blocked_multi_partition(spark):
-    """_monotonic rides the blocked shift expression — verify both
+    """_monotonic rides the blocked shift kernel — verify both
     directions on a 16-partition frame (a global unpartitioned lag
     would still be correct, so also assert the plan is block-keyed)."""
     pdf = pd.DataFrame({"x": np.arange(3000, dtype=np.int64)})
@@ -551,8 +602,10 @@ def test_is_monotonic_blocked_multi_partition(spark):
     # plan shape: the lag inside _monotonic must be the blocked kernel —
     # no partition-less window spec ordered directly on __order__ (the
     # single-task global-window signature); the blocked spec leads with
-    # the block-id expression (aliased _w0 by Catalyst).
-    probe = f._sdf.select(s.shift(1)._scol.alias("__p__"))
+    # the block-id expression (aliased _w0 by Catalyst). The shift
+    # rebinds the anchor's plan, so it runs before _sdf is read.
+    prev = s.shift(1)
+    probe = f._sdf.select(prev._scol.alias("__p__"))
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "windowspecdefinition(__order__" not in plan
     # non-monotonic data
@@ -560,6 +613,57 @@ def test_is_monotonic_blocked_multi_partition(spark):
     f2 = gp.Frame(spark.createDataFrame(pdf2).repartition(4))
     assert f2["x"].is_monotonic_increasing() is False
     assert f2["x"].is_monotonic_decreasing() is False
+
+
+def test_monotonic_and_autocorr_read_the_rebound_anchor(spark):
+    """Regression: _monotonic and autocorr projected from the anchor's
+    OLD plan while the shift kernel rebound it, so the select could
+    not resolve the kernel's internal column (UNRESOLVED_COLUMN
+    __index_serw*). Both must run the shift first, then read the
+    anchor — checked against pandas on a 16-partition frame, twice on
+    the same anchor so the second call sees an already-rebound plan."""
+    rng = np.random.RandomState(7)
+    n = 3000
+    v = np.cumsum(rng.normal(0, 1, n))
+    pdf = pd.DataFrame({"k": np.arange(n), "x": np.arange(n, dtype=np.int64),
+                        "v": v})
+    f = gp.Frame(spark.createDataFrame(pdf).repartition(16)).sort_values("k")
+    for _ in range(2):
+        assert f["x"].is_monotonic_increasing() is True
+        assert f["x"].is_monotonic_decreasing() is False
+        assert f["v"].is_monotonic_increasing() is False
+        for lag in (1, 3):
+            got = f["v"].autocorr(lag)
+            assert np.isclose(got, pdf["v"].autocorr(lag), rtol=1e-9), lag
+    assert any("serw" in c for c in f._sdf.columns)
+
+
+def test_series_order_op_chain_plan_stays_flat(spark):
+    """Regression: every Series order op rebinds its anchor frame, and
+    pinning each rebound plan on top of the last nested the cached
+    plans — Spark renders each nested cached AQE plan twice, so the
+    plan string grew ~4x per op and 16 ranks on one anchor ran the JVM
+    out of heap. Twelve ops on one anchor: pandas parity at every
+    step, and the plan stays small."""
+    rng = np.random.RandomState(5)
+    n = 2000
+    v = np.round(rng.normal(20, 3, n))
+    v[rng.rand(n) < 0.1] = np.nan
+    pdf = pd.DataFrame({"k": np.arange(n), "v": v})
+    f = gp.Frame(spark.createDataFrame(pdf).repartition(16)).sort_values("k")
+    s = f["v"]
+    methods = ("average", "min", "max", "dense", "first", "average")
+    for i in range(12):
+        if i % 2:
+            got_s, exp = s.cumsum(), pdf["v"].cumsum()
+        else:
+            m = methods[i // 2]
+            got_s, exp = s.rank(method=m), pdf["v"].rank(method=m)
+        out = f.assign(o=got_s)
+        got = out.to_pandas().sort_values("k")["o"].to_numpy()
+        assert np.allclose(got, exp.to_numpy(), equal_nan=True), i
+    plan = out._sdf._jdf.queryExecution().optimizedPlan().toString()
+    assert len(plan) < 50_000, len(plan)
 
 
 def test_asof_value_true_positions_multi_partition(spark):
@@ -1531,51 +1635,43 @@ def test_memo_table_identity_and_pin_stability(spark):
 def test_series_window_escalates_past_literal_cap(spark):
     """r8 VERDICT missing #1: a frame-anchored Series window op used to
     cap silently at 256 literal blocks while the frame API fanned to
-    4096. With the literal cap lowered below defaultParallelism (conf
-    ``spark.gopandas.seriesLiteralBlockCap``), Series rolling/expanding
-    aggregates must route through the frame-mode broadcast-table
-    kernels — the composed assign() answer stays exactly pandas', and
-    the plan is the blocked kernel (broadcast block join), not the
-    literal-carry expression."""
+    4096. Series rolling/expanding aggregates now always route through
+    the frame-mode broadcast-table kernels — the composed assign()
+    answer stays exactly pandas', and the plan is the blocked kernel
+    (broadcast block join), not a literal-carry expression."""
     rng = np.random.RandomState(31)
     n = 4_000
     v = rng.normal(50, 4, n)
     v[rng.random(n) < 0.1] = np.nan
     pdf = pd.DataFrame({"k": np.arange(n), "v": v})
-    spark.conf.set("spark.gopandas.seriesLiteralBlockCap", "8")
-    try:
-        f = gp.Frame(spark.createDataFrame(pdf).repartition(16)).sort_values("k")
-        s = f["v"]
-        out = f.assign(
-            rsum=s.rolling(5).sum().round(6),
-            rvar=s.rolling(7, min_periods=3).var(),
-            csum=s.expanding().sum().round(6),
-            cvar=s.expanding().var(),
-            ccnt=s.expanding(min_periods=4).count(),
-        )
-        # anchor frame was augmented in place with internal result cols
-        assert any("serw" in c for c in f._sdf.columns)
-        got = out.to_pandas().sort_values("k").reset_index(drop=True)
-        assert np.allclose(got["rsum"], pdf["v"].rolling(5).sum().round(6),
-                           rtol=1e-9, equal_nan=True)
-        assert np.allclose(got["rvar"],
-                           pdf["v"].rolling(7, min_periods=3).var(),
-                           rtol=1e-8, atol=1e-12, equal_nan=True)
-        assert np.allclose(got["csum"], pdf["v"].expanding().sum().round(6),
-                           rtol=1e-9, equal_nan=True)
-        assert np.allclose(got["cvar"], pdf["v"].expanding().var(),
-                           rtol=1e-8, atol=1e-12, equal_nan=True)
-        assert np.allclose(got["ccnt"],
-                           pdf["v"].expanding(min_periods=4).count(),
-                           rtol=1e-12, equal_nan=True)
-        plan = out._sdf._jdf.queryExecution().executedPlan().toString()
-        assert "hashpartitioning(__blk__" in plan
-    finally:
-        spark.conf.unset("spark.gopandas.seriesLiteralBlockCap")
-    # default cap: local[32] stays on the literal path (no augmentation)
+    f = gp.Frame(spark.createDataFrame(pdf).repartition(16)).sort_values("k")
+    s = f["v"]
+    out = f.assign(
+        rsum=s.rolling(5).sum().round(6),
+        rvar=s.rolling(7, min_periods=3).var(),
+        csum=s.expanding().sum().round(6),
+        cvar=s.expanding().var(),
+        ccnt=s.expanding(min_periods=4).count(),
+    )
+    # anchor frame was augmented in place with internal result cols
+    assert any("serw" in c for c in f._sdf.columns)
+    got = out.to_pandas().sort_values("k").reset_index(drop=True)
+    assert np.allclose(got["rsum"], pdf["v"].rolling(5).sum().round(6),
+                       rtol=1e-9, equal_nan=True)
+    assert np.allclose(got["rvar"],
+                       pdf["v"].rolling(7, min_periods=3).var(),
+                       rtol=1e-8, atol=1e-12, equal_nan=True)
+    assert np.allclose(got["csum"], pdf["v"].expanding().sum().round(6),
+                       rtol=1e-9, equal_nan=True)
+    assert np.allclose(got["cvar"], pdf["v"].expanding().var(),
+                       rtol=1e-8, atol=1e-12, equal_nan=True)
+    assert np.allclose(got["ccnt"],
+                       pdf["v"].expanding(min_periods=4).count(),
+                       rtol=1e-12, equal_nan=True)
+    plan = out._sdf._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning(__blk__" in plan
     f2 = gp.Frame(spark.createDataFrame(pdf).repartition(16)).sort_values("k")
     got2 = f2.assign(rs=f2["v"].rolling(5).sum()).to_pandas()
-    assert not any("serw" in c for c in f2._sdf.columns)
     assert np.allclose(got2.sort_values("k")["rs"],
                        pdf["v"].rolling(5).sum(), rtol=1e-9, equal_nan=True)
 
@@ -1724,51 +1820,46 @@ def test_ewm_cov_corr_fused_single_pass(spark):
 
 
 def test_series_order_ops_escalate_past_literal_cap(spark):
-    """r9 follow-through: Series cum*/rank/shift/diff also route to
-    the frame-mode broadcast-table kernels when the literal path would
-    cap below defaultParallelism — pandas parity with the conf cap
-    forced to 8 on local[32]."""
+    """r9 follow-through: Series cum*/rank/shift/diff always run the
+    frame-mode broadcast-table kernels over the anchor frame — pandas
+    parity at default settings."""
     rng = np.random.RandomState(61)
     n = 3_000
     v = rng.normal(0, 5, n)
     v[rng.random(n) < 0.1] = np.nan
     pdf = pd.DataFrame({"k": np.arange(n), "v": v})
-    spark.conf.set("spark.gopandas.seriesLiteralBlockCap", "8")
-    try:
-        f = gp.Frame(spark.createDataFrame(pdf).repartition(16)).sort_values("k")
-        s = f["v"]
-        out = f.assign(
-            cs=s.cumsum(), cm=s.cummax(),
-            rk=s.rank("average", pct=True),
-            sh=s.shift(3), df_=s.diff(2),
-        ).to_pandas().sort_values("k").reset_index(drop=True)
-        assert any("serw" in c for c in f._sdf.columns)
-        assert np.allclose(out["cs"], pdf["v"].cumsum(), rtol=1e-9,
-                           equal_nan=True)
-        assert np.allclose(out["cm"], pdf["v"].cummax(), rtol=1e-12,
-                           equal_nan=True)
-        assert np.allclose(out["rk"], pdf["v"].rank(pct=True), rtol=1e-12,
-                           equal_nan=True)
-        assert np.allclose(out["sh"], pdf["v"].shift(3), rtol=1e-12,
-                           equal_nan=True)
-        assert np.allclose(out["df_"], pdf["v"].diff(2), rtol=1e-9,
-                           equal_nan=True)
-        # fill_value ALSO escalates (r10): the blocked kernel fills
-        # via a beyond-edge probe, so data NaNs pass through while
-        # off-frame positions get the fill — pandas contract
-        n_serw = sum("serw" in c for c in f._sdf.columns)
-        out2 = f.assign(sf=f["v"].shift(2, fill_value=-1.0)).to_pandas()
-        assert sum("serw" in c for c in f._sdf.columns) > n_serw
-        exp2 = pdf["v"].shift(2, fill_value=-1.0)
-        assert np.allclose(out2.sort_values("k")["sf"], exp2, rtol=1e-12,
-                           equal_nan=True)
-        # negative periods (lead) with fill: trailing edge filled only
-        out3 = f.assign(sb=f["v"].shift(-4, fill_value=7.5)).to_pandas()
-        exp3 = pdf["v"].shift(-4, fill_value=7.5)
-        assert np.allclose(out3.sort_values("k")["sb"], exp3, rtol=1e-12,
-                           equal_nan=True)
-    finally:
-        spark.conf.unset("spark.gopandas.seriesLiteralBlockCap")
+    f = gp.Frame(spark.createDataFrame(pdf).repartition(16)).sort_values("k")
+    s = f["v"]
+    out = f.assign(
+        cs=s.cumsum(), cm=s.cummax(),
+        rk=s.rank("average", pct=True),
+        sh=s.shift(3), df_=s.diff(2),
+    ).to_pandas().sort_values("k").reset_index(drop=True)
+    assert any("serw" in c for c in f._sdf.columns)
+    assert np.allclose(out["cs"], pdf["v"].cumsum(), rtol=1e-9,
+                       equal_nan=True)
+    assert np.allclose(out["cm"], pdf["v"].cummax(), rtol=1e-12,
+                       equal_nan=True)
+    assert np.allclose(out["rk"], pdf["v"].rank(pct=True), rtol=1e-12,
+                       equal_nan=True)
+    assert np.allclose(out["sh"], pdf["v"].shift(3), rtol=1e-12,
+                       equal_nan=True)
+    assert np.allclose(out["df_"], pdf["v"].diff(2), rtol=1e-9,
+                       equal_nan=True)
+    # fill_value rides the kernel too (r10): the blocked kernel fills
+    # via a beyond-edge probe, so data NaNs pass through while
+    # off-frame positions get the fill — pandas contract
+    n_serw = sum("serw" in c for c in f._sdf.columns)
+    out2 = f.assign(sf=f["v"].shift(2, fill_value=-1.0)).to_pandas()
+    assert sum("serw" in c for c in f._sdf.columns) > n_serw
+    exp2 = pdf["v"].shift(2, fill_value=-1.0)
+    assert np.allclose(out2.sort_values("k")["sf"], exp2, rtol=1e-12,
+                       equal_nan=True)
+    # negative periods (lead) with fill: trailing edge filled only
+    out3 = f.assign(sb=f["v"].shift(-4, fill_value=7.5)).to_pandas()
+    exp3 = pdf["v"].shift(-4, fill_value=7.5)
+    assert np.allclose(out3.sort_values("k")["sb"], exp3, rtol=1e-12,
+                       equal_nan=True)
 
 
 def test_expanding_fused_stats_totals_path(spark):

@@ -91,17 +91,6 @@ def test_refs_sample_budget():
     assert 1024 * 8 <= 8 * 1024  # bytes per double column
 
 
-def test_shift_literal_edge_budget():
-    """Series literal shift embeds |periods|·P edge rows as literals;
-    |periods| > 1024 falls back to the exact single-window plan, so
-    the literal payload is ≤ 1024 · 256 · 8 B = 2 MiB."""
-    from go_pandas_spark import series as s
-
-    src = inspect.getsource(s.Series.shift)
-    assert "abs(periods) > 1024" in src
-    assert 1024 * 256 * 8 == 2 * MiB
-
-
 def test_sequential_guards():
     """Genuinely sequential surfaces refuse past 5M rows with an
     actionable error instead of silently serializing (kendall, scipy
